@@ -37,13 +37,33 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
 
+  /** I/O posture for long single-host runs (Bench, Verify and the timing
+    * tools) on a disk whose throughput swings between 10 and 130 MB/s:
+    *  - shuffle and spill files go to a RAM-backed dir when one exists,
+    *    so a bad disk window does not turn into shuffle time. Conversion
+    *    OUTPUTS still go to the real filesystem, so the conversion numbers
+    *    keep paying true output I/O: the local analog of NVMe shuffle
+    *    volumes on a cluster;
+    *  - generous network timeout and heartbeat interval: I/O-stalled
+    *    tasks otherwise starve the heartbeat thread past the 120 s default
+    *    and local-mode Spark kills itself (exit 56).
+    * Pass these to [[local]]; they are not part of the default posture. */
+  val LongRunIo: Map[String, String] = Map(
+    "spark.local.dir" ->
+      (if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_spark"
+       else System.getProperty("java.io.tmpdir")),
+    "spark.network.timeout" -> "1800s",
+    "spark.executor.heartbeatInterval" -> "60s")
+
   /** Local development/test session with the same engine posture at
-    * `local[n]` scale. */
-  def local(appName: String, cores: Int): SparkSession = {
+    * `local[n]` scale; `confs` are applied last (e.g. [[LongRunIo]]). */
+  def local(appName: String, cores: Int,
+            confs: Map[String, String] = Map.empty): SparkSession = {
     val spark = builder(appName, cores)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
+      .config(confs)
       .getOrCreate()
     // getOrCreate may return a pre-existing session whose builder confs
     // (incl. extensions) did NOT apply — make the FULL graft surface

@@ -71,9 +71,9 @@ object Graphs {
     * columns `src`, `dst` (self-loops allowed, duplicates NOT — dedupe
     * upstream; each (src,dst) row contributes once). Returns (node, pr).
     *
-    * The input frame is persisted before fan-out: `deg`, the degree join,
-    * and both `nodes` union branches all read it, and an expensive edge
-    * DERIVATION (q137's orders⋈lineitem + distinct) would otherwise be
+    * The input frame is persisted before fan-out (an already-persisted
+    * one is used as it is): `deg`, the degree join, and both `nodes`
+    * union branches all read it, and an expensive edge DERIVATION (q137's orders⋈lineitem + distinct) would otherwise be
     * recomputed once per consumer. Lineage is truncated only every
     * `checkpointEvery` iterations — each iteration adds a bounded two
     * joins to the plan, so short runs never pay a checkpoint's eager
@@ -84,7 +84,7 @@ object Graphs {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampNum >= 0 && dampNum <= 100, s"dampNum in [0,100], got $dampNum")
     require(checkpointEvery >= 1, s"checkpointEvery >= 1, got $checkpointEvery")
-    val e = OperatorCaches.persistTracked(edges)
+    val e = OperatorCaches.persistUnlessCached(edges)
     val parts = sizedParts(edges)
     val ed = edgesWithDeg(e, parts)
     val nodes = OperatorCaches.persistTracked(
@@ -123,7 +123,7 @@ object Graphs {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampNum >= 0 && dampNum <= 100, s"dampNum in [0,100], got $dampNum")
     require(checkpointEvery >= 1, s"checkpointEvery >= 1, got $checkpointEvery")
-    val e = OperatorCaches.persistTracked(edges)
+    val e = OperatorCaches.persistUnlessCached(edges)
     val parts = sizedParts(edges)
     val ed = edgesWithDeg(e, parts)
     val nodes = OperatorCaches.persistTracked(
@@ -204,7 +204,7 @@ object Graphs {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(dampNum >= 0 && dampNum <= 100, s"dampNum in [0,100], got $dampNum")
     require(checkpointEvery >= 1, s"checkpointEvery >= 1, got $checkpointEvery")
-    val e = OperatorCaches.persistTracked(edges)
+    val e = OperatorCaches.persistUnlessCached(edges)
     val parts = sizedParts(edges)
     val sw = e.groupBy(col("src")).agg(sum(col("w")).as("sw"))
     val ed = OperatorCaches.persistTracked(
@@ -253,13 +253,7 @@ object Graphs {
   def hits(edges: DataFrame, iterations: Int,
            scale: Long = 1000000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    // an already-persisted input (a FramePool-pooled edge frame) is left
-    // alone: persistTracked would hand it to the per-query release,
-    // silently unpersisting the pool's copy for the rest of the run
-    val e =
-      if (edges.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        OperatorCaches.persistTracked(edges)
-      else edges
+    val e = OperatorCaches.persistUnlessCached(edges)
     var h = e.select(col("src")).distinct().withColumn("h", lit(scale))
     var a: DataFrame = null
     // normalization totals cross the DRIVER as one-row aggregates (the

@@ -39,6 +39,15 @@ object OperatorCaches {
     p
   }
 
+  /** [[persistTracked]] for an operator's INPUT: an already-persisted
+    * frame (a [[FramePool]]-pooled one) is returned as it is. Tracking it
+    * would hand it to the per-query [[release]], silently unpersisting the
+    * pool's copy for the rest of the run. */
+  private[graft] def persistUnlessCached(df: DataFrame): DataFrame =
+    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      persistTracked(df)
+    else df
+
   /** Unpersist every operator-persisted intermediate registered since the
     * last release. Non-blocking; safe to call while results derived from
     * the caches are still referenced (Spark recomputes if re-used). */

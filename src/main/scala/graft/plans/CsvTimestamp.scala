@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * in the parquet→CSV hot path (k2) — Spark's univocity writer routes
   * every value through a `DateTimeFormatter` with per-field temporal
   * queries and a `StringBuilder`, measured at ~43% of the whole
-  * conversion (K2Lab, PERF_NOTES.md round 12). This formatter does the
+  * conversion (PERF_NOTES.md round 12). This formatter does the
   * same conversion with pure integer arithmetic (Hinnant's
   * civil-from-days calendar algorithm) straight into a 26-byte buffer —
   * no temporal objects, no builder, one allocation per value.

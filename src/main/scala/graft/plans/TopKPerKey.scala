@@ -174,11 +174,6 @@ object TopKPerKeyPlans {
       spark.experimental.extraOptimizations = cur :+ WindowTopKRewrite
   }
 
-  /** Remove the rewrite from a live session (test/aux hook). */
-  def removeRewrite(spark: SparkSession): Unit =
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == WindowTopKRewrite)
-
   /** Idempotently add the strategy to a live session (for sessions not
     * launched with spark.sql.extensions=graft.plans.GraftExtensions). */
   def ensureStrategy(spark: SparkSession): Unit = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CountMin, HistSketch, Pq, Postings, VectorIndex}
@@ -32,14 +32,8 @@ object DeleteProbe {
   private val K = 8
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_spark"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-delete-probe", 32,
+      graft.GraftSession.LongRunIo)
     spark.sparkContext.setLogLevel("ERROR")
     val replicas = args.headOption.map(_.toInt).getOrElse(10)
     val base = "/root/testdata/sf0.1"

@@ -1,13 +1,9 @@
 package graft.tools
 // Dump formatted physical plans for judge-relevant queries.
-import org.apache.spark.sql.SparkSession
 
 object ExplainAll {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local("graft-explain-all", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     val names = if (args.nonEmpty) args.toSet else Set(

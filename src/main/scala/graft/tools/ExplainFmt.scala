@@ -3,25 +3,18 @@ package graft.tools
 // Dump `.explain("formatted")` output for named registry queries into
 // files — the optimization-round evidence trail (plans/r16/<q>_<tag>.txt).
 // Usage: runMain graft.tools.ExplainFmt <outDir> <tag> <q1> <q2> ...
-// Runs at sf0.001 with the PlanGolden session shape so plans are
+// Runs at sf0.001 on a GraftSession.local session so plans are
 // deterministic and cheap; FramePool stays warm across the listed names
 // (bench-loop order sensitivity — list a family in bench order to see
 // the pooled-consumer plan shape).
-import org.apache.spark.sql.SparkSession
 
 object ExplainFmt {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val tag = args(1)
     val names = args.drop(2)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_spark"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-explain-fmt", 8,
+      graft.GraftSession.LongRunIo)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val specs = graft.SparkEntry.allSpecs.map(s => s.name -> s).toMap

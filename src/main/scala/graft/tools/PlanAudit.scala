@@ -2,14 +2,10 @@ package graft.tools
 // One-shot audit: physical-plan anti-pattern screen (graft.tools.PlanScreen,
 // shared with RegistryPlanSpec) over EVERY registered query at sf0.001,
 // plus the raw counts for recalibrating the screen's bounds.
-import org.apache.spark.sql.SparkSession
 
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local("graft-plan-audit", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     graft.SparkEntry.allSpecs.foreach { s =>

@@ -9,17 +9,12 @@ package graft.tools
 // pooled-frame reuse makes later queries' plans depend on earlier ones.
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 object PlanGolden {
   def main(args: Array[String]): Unit = {
-    // mirrors SparkTestBase's session config exactly: the recorded
-    // counts are parallelism-independent, but keeping the two sessions
-    // identical removes even the theoretical divergence class
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // the same GraftSession.local posture as SparkTestBase: the recorded
+    // counts are parallelism-independent, but identical sessions remove
+    // even the theoretical divergence class
+    val spark = graft.GraftSession.local("graft-plan-golden", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     // a failed plan build must ABORT the regeneration, not be skipped:

@@ -46,7 +46,7 @@ object PlanScreen {
     * not a new shuffle; only genuine Exchange nodes count. The match
     * runs to end-of-line so the node's [plan_id=N] is captured for the
     * physical dedupe below. */
-  private val ShuffleLine =
+  private[graft] val ShuffleLine =
     ("""(?m)^[\s+:*-]*Exchange (hashpartitioning|rangepartitioning|""" +
       """SinglePartition|RoundRobinPartitioning).*$""").r
 

@@ -1,15 +1,11 @@
 package graft.tools
 // Drive the reference-mirror pipelines end-to-end through the public API.
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.pipelines.{BenchGrid, ExtractData}
 
 object RunPipelines {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local("graft-run-pipelines", 8)
     spark.sparkContext.setLogLevel("ERROR")
     val out = Files.createTempDirectory("pipe_drive").toString
     val ex = ExtractData.run(spark,

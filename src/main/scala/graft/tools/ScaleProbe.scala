@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical scaling probe: time representative corpus operators at sf0.1
@@ -18,14 +17,8 @@ import org.apache.spark.sql.functions._
   * runs the REGISTERED queries unmodified against it. */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_spark"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-scale-probe", 32,
+      graft.GraftSession.LongRunIo)
     spark.sparkContext.setLogLevel("ERROR")
     val base = "/root/testdata/sf0.1"
     val big = java.nio.file.Files.createTempDirectory("scale10").toString

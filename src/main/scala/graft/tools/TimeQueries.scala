@@ -3,29 +3,14 @@ package graft.tools
 // Ad-hoc timing probe: time named registry queries (args) on
 // SPARK_GRAFT_SF_DIR with the Bench session shape — min of two warm runs,
 // OperatorCaches released between runs. Builder-side iteration aid only.
-import org.apache.spark.sql.SparkSession
 
 object TimeQueries {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // A/B knobs for AQE-coalescing probes. parallelismFirst=false was
-      // MEASURED WORSE at 32 cores on this fixture (q239 2.17→6.52 s,
-      // q155 2.17→3.40 s — compute-heavy post-shuffle stages collapse to
-      // ~1 partition and serialize), so the default stays Spark's.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_spark"
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
+    val spark = graft.GraftSession.local("graft-time-queries", cpus.toInt,
+      graft.GraftSession.LongRunIo)
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.entry(spark).count() // warm-up
     val qs = graft.SparkEntry.queries

@@ -1,18 +1,24 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 /** Session bootstrap: the graft surface (SQL functions + custom
   * operators) is present on a GraftSession.local session even when
   * getOrCreate returned a pre-existing session whose builder confs could
-  * not apply. */
+  * not apply, and every entry point opens its session through it. */
 class GraftSessionSpec extends SparkSpec {
 
-  // local() enables the window-top-k rewrite; detach it after each test
-  // so the shared test session's planning stays vanilla for other suites
-  override def withFixture(test: NoArgTest) =
+  // local() attaches the window-top-k rewrite; put the shared session's
+  // optimizations back as they were, whatever they were
+  override def withFixture(test: NoArgTest) = {
+    val saved = spark.experimental.extraOptimizations
     try super.withFixture(test)
-    finally graft.plans.TopKPerKeyPlans.removeRewrite(spark)
+    finally spark.experimental.extraOptimizations = saved
+  }
 
   test("local() session exposes graft functions and the top-k operator") {
     val s = GraftSession.local("graft-session-spec", 4)
@@ -33,13 +39,29 @@ class GraftSessionSpec extends SparkSpec {
     assert(top.toSeq === Seq(1, 3))
   }
 
-  test("builder carries the cluster posture (AQE, skew join, extensions)") {
-    // assert on the builder's config map via a throwaway session-less
-    // check: build against the existing session and read effective confs
+  test("builder carries the cluster posture (Kryo, extensions)") {
+    // Spark's own defaults (AQE on, skew join on) prove nothing; these two
+    // differ from a vanilla session only when GraftSession built it
     val s = GraftSession.local("graft-session-spec2", 4)
-    assert(s.conf.get("spark.sql.adaptive.enabled") === "true")
-    // shared-session caveat: confs set at FIRST session build win; the
-    // contract here is that the graft surface is present regardless
-    // (ensured registration), which the test above proves.
+    assert(s eq spark, "getOrCreate must hand back the shared test session")
+    assert(s.sparkContext.getConf.get("spark.serializer") ===
+      "org.apache.spark.serializer.KryoSerializer")
+    assert(s.sparkContext.getConf.get("spark.sql.extensions") ===
+      "graft.plans.GraftExtensions")
+  }
+
+  test("no source file but GraftSession.scala builds its own SparkSession") {
+    val call = Seq("SparkSession", "builder").mkString(".") // not itself a match
+    val root = Paths.get("src")
+    val files = Files.walk(root)
+    val offenders =
+      try files.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+        .filter(p => p.getFileName.toString != "GraftSession.scala")
+        .filter(p => Files.readString(p).contains(call))
+        .map(root.relativize(_: Path).toString).toList.sorted
+      finally files.close()
+    assert(offenders.isEmpty,
+      s"open the session through GraftSession instead: ${offenders.mkString(", ")}")
   }
 }

@@ -109,4 +109,26 @@ class GraphsSpec extends SparkSpec {
       ("hub", "A", 615384615L), ("hub", "B", 384615384L)))
     graft.operators.OperatorCaches.release()
   }
+
+  test("a persisted edge frame survives the per-query release of every centrality") {
+    // a FramePool-pooled edge frame reaches these operators already
+    // persisted; the per-query release must not unpersist the pool's copy
+    val plain = Seq(("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"))
+      .toDF("src", "dst").persist()
+    val weighted = Seq(("a", "b", 1L), ("b", "c", 2L), ("c", "a", 1L), ("a", "c", 3L))
+      .toDF("src", "dst", "w").persist()
+    val entryPoints: Seq[(String, org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      ("pageRank", plain, Graphs.pageRank(_, iterations = 2)),
+      ("personalizedPageRank", plain,
+        Graphs.personalizedPageRank(_, col("node") === "a", iterations = 2)),
+      ("weightedPageRank", weighted, Graphs.weightedPageRank(_, iterations = 2)),
+      ("hits", plain, Graphs.hits(_, iterations = 1)))
+    try entryPoints.foreach { case (name, edges, run) =>
+      run(edges).collect()
+      graft.operators.OperatorCaches.release()
+      assert(edges.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        s"$name unpersisted its already-persisted edge frame")
+    } finally { plain.unpersist(); weighted.unpersist() }
+  }
 }

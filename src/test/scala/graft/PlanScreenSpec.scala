@@ -122,4 +122,19 @@ class PlanScreenSpec extends SparkSpec {
     assert(offs.exists(_.contains("shuffle exchanges")))
     graft.operators.OperatorCaches.release()
   }
+
+  test("real plans: every shuffle line the screen matches carries a plan_id") {
+    // counts() dedupes on [plan_id=N]; if a Spark release printed
+    // Exchange nodes without it, the screen would silently fall back to
+    // one count per printed occurrence. q37 reads pooled frames, so its
+    // plan also re-prints InMemoryRelation build subtrees.
+    val spec = SparkEntry.allSpecs.find(_.name == "q37_dup_clusters").get
+    val plan = spec.fn(spark, sfDir).queryExecution.executedPlan.toString
+    val lines = PlanScreen.ShuffleLine.findAllIn(plan).toList
+    assert(lines.nonEmpty, s"no shuffle line matched in:\n$plan")
+    val bare = lines.filterNot(_.contains("[plan_id="))
+    assert(bare.isEmpty, s"Exchange lines without [plan_id=:\n${bare.mkString("\n")}")
+    graft.operators.OperatorCaches.release()
+    graft.operators.FramePool.release()
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.{TopKPerKeyExec, TopKPerKeyPlans}
+import graft.plans.{TopKPerKeyExec, TopKPerKeyPlans, WindowTopKRewrite}
 
 /** Custom per-key top-k physical operator: row-for-row equality with the
   * window formulation under a total order, two-phase plan shape (partial →
@@ -18,6 +18,16 @@ class TopKPerKeySpec extends SparkSpec {
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= k).drop("__rn")
   }
 
+  /** Runs `f` with the window-top-k rewrite excluded by name. The shared
+    * session carries the rule twice (GraftExtensions injects it and
+    * GraftSession.local adds it as an experimental optimization); the
+    * exclusion reaches both, so `f` plans the plain window formulation. */
+  private def withoutRewrite[T](f: => T): T = {
+    val excluded = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(excluded, WindowTopKRewrite.ruleName)
+    try f finally spark.conf.unset(excluded)
+  }
+
   private def sample = spark.range(0, 10000).toDF("id")
     .withColumn("key", pmod(col("id"), lit(37)).cast("int"))
     .withColumn("value", pmod(col("id") * 2654435761L, lit(1000003L)).cast("double"))
@@ -29,7 +39,7 @@ class TopKPerKeySpec extends SparkSpec {
       val native = TopKPerKeyPlans.topKPerKey(
         df, Seq("key"), Seq(desc("value"), col("id")), k)
         .orderBy("key", "id").collect()
-      val win = windowTopK(df, "key", k).orderBy("key", "id").collect()
+      val win = withoutRewrite(windowTopK(df, "key", k).orderBy("key", "id").collect())
       assert(native.toSeq === win.toSeq, s"diverged at k=$k")
     }
   }
@@ -80,6 +90,7 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("WindowTopKRewrite turns the row_number idiom into the native operator") {
+    val saved = spark.experimental.extraOptimizations
     try {
       TopKPerKeyPlans.ensureRewrite(spark)
       val df = sample
@@ -88,9 +99,13 @@ class TopKPerKeySpec extends SparkSpec {
       assert(optimized.collectFirst { case t: graft.plans.TopKPerKey => t }.nonEmpty,
         s"rewrite did not fire:\n$optimized")
       // results equal the un-rewritten formulation
-      TopKPerKeyPlans.removeRewrite(spark)
-      val plain = windowTopK(df, "key", 3).orderBy("key", "id").collect()
-      TopKPerKeyPlans.ensureRewrite(spark)
+      val plain = withoutRewrite {
+        val off = windowTopK(df, "key", 3)
+        assert(off.queryExecution.optimizedPlan
+          .collectFirst { case t: graft.plans.TopKPerKey => t }.isEmpty,
+          "excluded rewrite still fired")
+        off.orderBy("key", "id").collect()
+      }
       val rewritten = windowTopK(df, "key", 3).orderBy("key", "id").collect()
       assert(rewritten.toSeq === plain.toSeq)
 
@@ -113,7 +128,7 @@ class TopKPerKeySpec extends SparkSpec {
       assert(keepsRank.queryExecution.optimizedPlan
         .collectFirst { case t: graft.plans.TopKPerKey => t }.isEmpty,
         "must not rewrite when rank values are referenced")
-    } finally TopKPerKeyPlans.removeRewrite(spark)
+    } finally spark.experimental.extraOptimizations = saved
   }
 
   test("unknown key or order column fails fast with a clear message") {
